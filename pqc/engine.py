@@ -8,8 +8,10 @@ The reference emits, per run, a results table plus a failed-rows table
   `(part, constraint, n_checked, n_violations, passed)`;
 - table-level checks (schema, drift) reported alongside.
 
-All constraint plans are lazy; a single action materializes the
-violation union, and the verdict rollup reuses it via cache.
+Each constraint branch is materialized by one job that also counts its
+violations per (part, constraint); ``violations`` is the union of the
+cached branches and ``verdicts`` is built on the driver from those
+counts, so reading either recomputes nothing.
 """
 
 from __future__ import annotations
@@ -18,8 +20,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
 
 from pqc.constraints import SuiteContext
+from pqc.io import driver_frame
 
 VERDICT_COLS = ("constraint", "n_checked", "n_violations", "passed")
 
@@ -116,10 +120,12 @@ class ValidationSuite:
         from pqc.constraints.schema_check import expect_schema
 
         schema_problems = expect_schema(ctx.images)
+        meta = ctx.meta()
         # materialize the shared payload-free cache up front so the
         # concurrent branches below read it instead of contending on
-        # the cache locks of a cold projection (measured faster eager)
-        ctx.meta().count()
+        # the cache locks of a cold projection (measured faster eager);
+        # the same job yields each partition's n_checked
+        n_checked = dict(meta.groupBy("part").count().collect())
         # Materialize the independent constraint branches CONCURRENTLY:
         # each branch is a short chain of small shuffle stages whose
         # wall time is dominated by per-stage scheduling latency, not
@@ -129,33 +135,49 @@ class ValidationSuite:
         # collapses to max(decode island, widest branch). Branches are
         # persisted (released via SuiteResult.release()), so the union
         # below and every downstream consumer reuse the cached blocks.
+        # Each branch's one job counts its violations per (part,
+        # constraint), which is all the verdict table needs.
         plans = [fn(ctx) for fn in self._builders]  # serial: builds lazy plans
         for p in plans:
             ctx.track_persist(p)
+
+        def counts(p: DataFrame) -> list:
+            return p.groupBy("part", "constraint").count().collect()
+
         with ThreadPoolExecutor(max_workers=len(plans)) as ex:
-            list(ex.map(lambda p: p.count(), plans))
+            n_violations = {
+                (r["part"], r["constraint"]): r["count"]
+                for rows in ex.map(counts, plans)
+                for r in rows
+                if r["part"] is not None  # a null part joins no verdict row
+            }
         violations = plans[0]
         for p in plans[1:]:
             violations = violations.unionByName(p)
+        # the union has every branch's partitions (~90 for 14
+        # constraints); coalescing is narrow over the cached branches
+        # and lets the count and partitioned write run one task a core
+        spark = ctx.images.sparkSession
+        violations = violations.coalesce(spark.sparkContext.defaultParallelism)
 
-        parts = ctx.meta().groupBy("part").agg(F.count(F.lit(1)).alias("n_checked"))
-        names = ctx.images.sparkSession.createDataFrame(
-            [(n,) for n in self.constraint_names], "constraint string"
+        # parts × constraint names, built on the driver from the counts
+        # above: every later reader (ledger, summary, writes) scans
+        # these local rows instead of recomputing the rollup
+        rows = []
+        for part, n in sorted(n_checked.items(), key=lambda kv: (kv[0] is None, kv[0])):
+            for name in self.constraint_names:
+                v = n_violations.get((part, name), 0)
+                rows.append((part, name, n, v, v == 0))
+        schema = StructType(
+            [
+                meta.schema["part"],
+                StructField("constraint", StringType()),
+                StructField("n_checked", LongType(), False),
+                StructField("n_violations", LongType(), False),
+                StructField("passed", BooleanType(), False),
+            ]
         )
-        vcounts = violations.groupBy("part", "constraint").agg(
-            F.count(F.lit(1)).alias("n_violations")
-        )
-        verdicts = (
-            parts.crossJoin(F.broadcast(names))
-            .join(vcounts, ["part", "constraint"], "left")
-            .select(
-                "part",
-                "constraint",
-                "n_checked",
-                F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations"),
-                (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
-            )
-        )
+        verdicts = driver_frame(spark, rows, schema)
         drift = (
             drift_verdict(ctx.images, ctx.baseline, drift_column)
             if ctx.baseline is not None

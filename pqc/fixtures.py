@@ -283,6 +283,7 @@ def ensure_generated_parquet(
         # check-then-overwrite raced concurrent pqc sessions on this
         # shared host, and the DuckDB oracles glob path/*.parquet
         # without checking _SUCCESS (r5 ADVICE)
+        import contextlib
         import shutil
 
         tmp = f"{path}.build{os.getpid()}"
@@ -295,6 +296,13 @@ def ensure_generated_parquet(
         try:
             os.rename(tmp, path)  # atomic; loser keeps winner's copy
         except OSError:
+            if not os.path.exists(path + "/_SUCCESS"):
+                # no winner: `path` is a stale unfinished directory that
+                # would fail this rename in every session and be served
+                # as is — replace it
+                shutil.rmtree(path, ignore_errors=True)
+                with contextlib.suppress(OSError):
+                    os.rename(tmp, path)
             shutil.rmtree(tmp, ignore_errors=True)
     return path
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -57,6 +58,19 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     """
     n = n or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n)
+
+
+def driver_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A DataFrame over rows already on the driver, planned as a
+    ``LocalTableScan``: collecting it runs no Spark job, and no reader
+    recomputes what produced the rows. (``createDataFrame`` from a
+    Python list plans an RDD scan; from an Arrow table, a local
+    relation.)"""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.table({f.name: list(c) for f, c in zip(schema.fields, cols)})
+    return spark.createDataFrame(table, schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

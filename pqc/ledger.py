@@ -26,20 +26,28 @@ an incremental phash band index (future work).
 
 from __future__ import annotations
 
+import functools
+import operator
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pqc import __version__
 from pqc.constraints import SuiteContext
 from pqc.engine import SuiteResult, ValidationSuite
+from pqc.io import driver_frame
 
 LEDGER_SCHEMA = (
     "part int, input_fingerprint bigint, n_rows bigint, n_violations bigint, "
     "passed boolean, engine_version string, run_id string, wall_ms bigint"
 )
+# part ranges a resume filter spells out before the remaining parts go
+# into one IN-set: past a handful, OR-ed comparisons cost more per
+# partition than one hash lookup
+MAX_PART_RANGES = 16
 
 
 def partition_fingerprints(images: DataFrame) -> DataFrame:
@@ -75,13 +83,43 @@ def partition_fingerprints(images: DataFrame) -> DataFrame:
     )
 
 
-def completed_partitions(spark: SparkSession, ledger_path: str) -> DataFrame:
-    """(part, input_fingerprint) pairs already validated, or empty."""
-    try:
-        led = spark.read.parquet(ledger_path)
-    except Exception:
-        return spark.createDataFrame([], "part int, input_fingerprint bigint")
-    return led.select("part", "input_fingerprint").dropDuplicates()
+def completed_partitions(spark: SparkSession, ledger_path: str) -> set[tuple[int, int]]:
+    """(part, input_fingerprint) pairs already validated. A ledger that
+    does not exist yet is empty without running a job, and the schema
+    is given, so reading an existing one infers nothing."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(ledger_path)
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
+        return set()
+    led = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
+    return {tuple(r) for r in led.select("part", "input_fingerprint").distinct().collect()}
+
+
+def part_ranges(parts: list[int]) -> list[tuple[int, int]]:
+    """Sorted distinct partition numbers → contiguous (lo, hi) runs."""
+    runs: list[tuple[int, int]] = []
+    for p in parts:
+        if runs and p == runs[-1][1] + 1:
+            runs[-1] = (runs[-1][0], p)
+        else:
+            runs.append((p, p))
+    return runs
+
+
+def part_filter(parts: list[int]) -> Column:
+    """Predicate selecting exactly ``parts`` (sorted, distinct): the
+    longest contiguous runs as ``part BETWEEN lo AND hi``, the rest as
+    one IN-set. A resume over 10k partitions with a few already done
+    plans a handful of ranges, not a 10k-literal IN-list; a scattered
+    set stays one hash lookup a partition, since thousands of OR-ed
+    ranges are too wide to code-generate (5000 ranges over 20k rows,
+    local[2] on a 4-vCPU host: 22 s, against 0.6 s for the IN-set)."""
+    runs = sorted(part_ranges(parts), key=lambda r: r[1] - r[0], reverse=True)
+    conds = [F.col("part").between(lo, hi) for lo, hi in runs[:MAX_PART_RANGES]]
+    rest = [p for lo, hi in runs[MAX_PART_RANGES:] for p in range(lo, hi + 1)]
+    if rest:
+        conds.append(F.col("part").isin(rest))
+    return functools.reduce(operator.or_, conds)
 
 
 def run_with_resume(
@@ -94,53 +132,40 @@ def run_with_resume(
     """Validate only partitions not yet in the ledger; append results.
 
     Returns (suite_result_or_None_if_nothing_to_do, skipped_parts).
-    The part filter is an IN-list predicate on the partition column, so
-    the parquet/Iceberg scan prunes skipped partitions at planning time
-    — skipped data is never read.
+    The fingerprints are computed by one job and the ledger is read by
+    at most one; skipped and todo parts are split on the driver. The
+    part filter (``part_filter``) is on the partition column, so the
+    parquet/Iceberg scan prunes skipped partitions at planning time —
+    skipped data is never read. Rows with a null part are never
+    validated (no partition to checkpoint them under).
     """
     suite = suite or ValidationSuite()
-    fps = partition_fingerprints(images)
+    fps = {r["part"]: r["input_fingerprint"] for r in partition_fingerprints(images).collect()}
     done = completed_partitions(spark, ledger_path)
-    done_fps = fps.join(done, ["part", "input_fingerprint"], "left_semi")
-    skipped = [r["part"] for r in done_fps.select("part").collect()]
-    todo_parts = [
-        r["part"]
-        for r in fps.join(done, ["part", "input_fingerprint"], "left_anti")
-        .select("part")
-        .collect()
-    ]
-    if not todo_parts:
-        return None, sorted(skipped)
+    skipped = sorted(p for p, fp in fps.items() if (p, fp) in done)
+    todo = sorted(p for p, fp in fps.items() if p is not None and (p, fp) not in done)
+    if not todo:
+        return None, skipped
 
-    subset = images.filter(F.col("part").isin(todo_parts))
     t0 = time.monotonic()
-    ctx = SuiteContext(images=subset, image_dim=image_dim)
+    ctx = SuiteContext(images=images.filter(part_filter(todo)), image_dim=image_dim)
     result = suite.run(ctx)
-    per_part = (
-        result.verdicts.groupBy("part")
-        .agg(
-            F.max("n_checked").alias("n_rows"),
-            F.sum("n_violations").alias("n_violations"),
-        )
-        .withColumn("passed", F.col("n_violations") == 0)
-    )
     wall_ms = int((time.monotonic() - t0) * 1000)
+    n_rows: dict[int, int] = {}
+    n_viol: dict[int, int] = {}
+    for r in result.verdicts.collect():  # driver-built rows: no job
+        n_rows[r["part"]] = r["n_checked"]
+        n_viol[r["part"]] = n_viol.get(r["part"], 0) + r["n_violations"]
     run_id = uuid.uuid4().hex[:12]
-    ledger_rows = (
-        per_part.join(fps.select("part", "input_fingerprint"), "part")
-        .select(
-            "part",
-            "input_fingerprint",
-            F.col("n_rows").cast("bigint"),
-            F.col("n_violations").cast("bigint"),
-            "passed",
-            F.lit(__version__).alias("engine_version"),
-            F.lit(run_id).alias("run_id"),
-            F.lit(wall_ms).alias("wall_ms"),
-        )
+    ledger_rows = [
+        (p, fps[p], n_rows[p], n_viol[p], n_viol[p] == 0, __version__, run_id, wall_ms)
+        for p in sorted(n_rows)
+    ]
+    schema = StructType.fromDDL(LEDGER_SCHEMA)
+    driver_frame(spark, ledger_rows, schema).coalesce(1).write.mode("append").parquet(
+        ledger_path
     )
-    ledger_rows.write.mode("append").parquet(ledger_path)
-    return result, sorted(skipped)
+    return result, skipped
 
 
 # ---------------------------------------------------------------------------

@@ -68,12 +68,12 @@ def main() -> int:
     summary: dict = {"skipped_partitions": skipped}
     failed = 0
     if result is not None:
-        verdicts = result.verdicts
-        failed = verdicts.filter("NOT passed").count()
-        summary["validated_partitions"] = (
-            verdicts.select("part").distinct().count()
-        )
-        summary["n_violations"] = result.violations.count()
+        # the verdict table is built on the driver: collecting it runs
+        # no job, and its counts reconcile with the violation rows
+        verdicts = result.verdicts.collect()
+        failed = sum(not r["passed"] for r in verdicts)
+        summary["validated_partitions"] = len({r["part"] for r in verdicts})
+        summary["n_violations"] = sum(r["n_violations"] for r in verdicts)
         summary["schema_problems"] = result.schema_problems
         if baseline is not None:
             drift_ctx = SuiteContext(images=images)

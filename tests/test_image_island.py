@@ -232,13 +232,30 @@ def test_near_dup_violations(images, suite_result):
 
 
 def test_verdict_rollup_consistent(images, suite_result):
-    # per-partition verdict counts must reconcile with the violation table
+    # per-partition verdict counts must reconcile EXACTLY with the
+    # violation table: every (part, constraint) count, not just the total
     v = suite_result.verdicts
-    total_viol = v.agg(F.sum("n_violations")).first()[0]
-    assert total_viol == suite_result.violations.count()
-    n_parts = images.select("part").distinct().count()
-    n_constraints = v.select("constraint").distinct().count()
-    assert v.count() == n_parts * n_constraints
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in v.schema] == [
+        ("part", "int", True),
+        ("constraint", "string", True),
+        ("n_checked", "bigint", False),
+        ("n_violations", "bigint", False),
+        ("passed", "boolean", False),
+    ]
+    rows = v.collect()
+    got = {(r["part"], r["constraint"]): r["n_violations"] for r in rows if r["n_violations"]}
+    want = {
+        (r["part"], r["constraint"]): r["count"]
+        for r in suite_result.violations.groupBy("part", "constraint").count().collect()
+    }
+    assert got == want
+    assert sum(r["n_violations"] for r in rows) == suite_result.violations.count()
+    assert all(r["passed"] == (r["n_violations"] == 0) for r in rows)
+    n_checked = dict(images.groupBy("part").count().collect())
+    assert all(r["n_checked"] == n_checked[r["part"]] for r in rows)
+    names = {r["constraint"] for r in rows}
+    assert len({(r["part"], r["constraint"]) for r in rows}) == len(rows)
+    assert len(rows) == len(n_checked) * len(names)
 
 
 # ---------------------------------------------------------------------------

@@ -203,3 +203,45 @@ def test_hier_rollup_day_reuses_hour_exchange(spark):
     df.collect()  # finalize the adaptive plan
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final, final[:3000]
+
+
+def test_suite_outputs_recompute_nothing(spark, tmp_path):
+    """One resumable run computes each output once: the verdict table
+    is driver-built (a LocalTableScan, no exchange or cache scan behind
+    it), the violation union runs at most a task a core, and the run's
+    own jobs collect the partition fingerprints in one action — no
+    second fingerprint pass, no ledger read on a fresh ledger, and the
+    ledger append writes local rows in a single stage."""
+    from pqc.engine import ValidationSuite
+    from pqc.fixtures import cached_images_path, generate_image_dim
+    from pqc.ledger import run_with_resume
+
+    images = spark.read.parquet(cached_images_path(spark, 2000))
+    dim = generate_image_dim(images)
+    suite = ValidationSuite(include_integrity=False, include_near_dup=False, include_text=False)
+    sc = spark.sparkContext
+    group = "test_suite_outputs_recompute_nothing"
+    sc.setJobGroup(group, "one resumable run")
+    try:
+        res, skipped = run_with_resume(spark, images, str(tmp_path / "ledger"), suite, dim)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    try:
+        assert skipped == []
+        plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "Exchange" not in plan and "InMemoryTableScan" not in plan, plan
+        assert res.violations.rdd.getNumPartitions() <= sc.defaultParallelism
+    finally:
+        res.release()
+
+    tracker = sc.statusTracker()
+    stages_by_site: dict[str, list[int]] = {}  # action call site -> stages per job
+    for j in tracker.getJobIdsForGroup(group):
+        names = [tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds]
+        stages_by_site.setdefault(names[0], []).append(len(names))
+    # the suite's branch jobs run on pool threads, outside the group
+    ledger_sites = [s for s in stages_by_site if "ledger.py" in s]
+    assert len(ledger_sites) == 1, stages_by_site  # the one fingerprint collect
+    appends = [n for s, n in stages_by_site.items() if s.startswith("parquet at")]
+    assert appends == [[1]], stages_by_site

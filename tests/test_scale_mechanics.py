@@ -262,3 +262,92 @@ def test_srp_dup_degenerate_corpus_bounded(spark):
     expected = {(a, b) for a in range(N_DUP) for b in range(a + 1, N_DUP)}
     assert set(pairs) == expected
     assert all(abs(v - 1.0) < 1e-8 for v in pairs.values())
+
+
+def test_part_ranges_collapse_contiguous_runs():
+    from pqc.ledger import part_ranges
+
+    assert part_ranges([]) == []
+    assert part_ranges([0, 1, 2, 5, 7, 8]) == [(0, 2), (5, 5), (7, 8)]
+
+
+def test_part_filter_selects_exactly_the_parts(spark):
+    """Contiguous runs and a scattered remainder (more runs than the
+    filter spells out as ranges) select exactly the given parts."""
+    from pqc.ledger import MAX_PART_RANGES, part_filter
+
+    parts = list(range(0, 4 * MAX_PART_RANGES, 2)) + list(range(200, 300))
+    df = spark.range(400).select(F.col("id").cast("int").alias("part"))
+    got = {r["part"] for r in df.filter(part_filter(parts)).collect()}
+    assert got == set(parts)
+
+
+class _Stop(Exception):
+    pass
+
+
+class _CaptureSuite:
+    """Stands in for ValidationSuite: keeps the input run_with_resume
+    hands it, then stops the run."""
+
+    def run(self, ctx):
+        self.images = ctx.images
+        raise _Stop
+
+
+def test_resume_filter_plan_is_bounded_at_10k_partitions(spark, tmp_path):
+    """A resume over 10k partitions with a few already validated must
+    plan a handful of part ranges, not a 10k-literal IN-list."""
+    from pqc.ledger import LEDGER_SCHEMA, partition_fingerprints, run_with_resume
+
+    n_parts = 10_000
+    images = spark.range(2 * n_parts).select(
+        F.format_string("img_%08d", "id").alias("image_id"),
+        (F.col("id") % n_parts).cast("int").alias("part"),
+        F.lit(64).alias("w"),
+        F.lit(64).alias("h"),
+        F.lit("png").alias("fmt"),
+        F.lit("c").alias("caption"),
+        F.col("id").alias("phash"),
+    )
+    fps = {r["part"]: r["input_fingerprint"] for r in partition_fingerprints(images).collect()}
+    done = list(range(0, n_parts, 1000))
+    ledger = str(tmp_path / "ledger")
+    spark.createDataFrame(
+        [(p, fps[p], 2, 0, True, "test", "r0", 0) for p in done], LEDGER_SCHEMA
+    ).write.parquet(ledger)
+
+    suite = _CaptureSuite()
+    try:
+        run_with_resume(spark, images, ledger, suite)
+    except _Stop:
+        pass
+    # the JSON form has every expression node; toString truncates lists
+    plan = suite.images._jdf.queryExecution().analyzed().toJSON()
+    assert len(plan) < 20_000, f"{len(plan)} chars of plan for the part filter"
+    parts = {r["part"] for r in suite.images.select("part").distinct().collect()}
+    assert parts == set(range(n_parts)) - set(done)
+
+
+def test_fixture_publish_replaces_stale_unfinished_dir(spark, tmp_path):
+    """A fixture directory without _SUCCESS (a crashed writer's) must
+    be replaced, not block every later publish and be served as is."""
+    import glob
+    import os
+
+    from pqc.fixtures import ensure_generated_parquet
+    from pqc.rule_packs import _serving_bulk_row
+
+    path = str(tmp_path / "fixture")
+    os.makedirs(path)
+    with open(f"{path}/part-00000-stale.parquet", "w") as f:
+        f.write("not parquet")
+    schema = (
+        "sku_id string, scope string, amount_value double, "
+        "amount_unit string, serving_size_g double"
+    )
+    assert ensure_generated_parquet(spark, path, 20, _serving_bulk_row, schema, n_tasks=2) == path
+    assert os.path.exists(f"{path}/_SUCCESS")
+    assert not os.path.exists(f"{path}/part-00000-stale.parquet")
+    assert spark.read.parquet(path).count() == 20
+    assert glob.glob(f"{path}.build*") == []
